@@ -85,7 +85,15 @@ def candidate_bound_check(
     if n_rows is None:
         if rows_per_input is None:
             raise ValueError(f"{op}: n_rows=None requires rows_per_input")
-        n_rows = 0 if agg["t"] is None else int(agg["t"]) // int(rows_per_input)
+        t = 0 if agg["t"] is None else int(agg["t"])
+        if t % int(rows_per_input):
+            raise RuntimeError(
+                f"{op}: Σ|bucket| = {t:,} is not a multiple of "
+                f"rows_per_input = {rows_per_input} — the banding did not "
+                f"emit a fixed number of rows per input, so n cannot be "
+                f"derived from it; pass n_rows explicitly"
+            )
+        n_rows = t // int(rows_per_input)
     bound = max(float(min_candidates), factor * float(n_rows))
     if total is not None and float(total) > bound:
         raise RuntimeError(

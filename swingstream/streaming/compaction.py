@@ -74,12 +74,7 @@ from swingstream.operators.dedup import (
     line_dedup,
 )
 from swingstream.sources.catalog import IcebergLiteTable
-
-
-def _commit_dir_label(batch_id) -> str:
-    """Data-dir name for a commit — must mirror catalog.commit()."""
-    b = str(batch_id)
-    return f"batch-{int(b):010d}" if b.isdigit() else f"batch-{b}"
+from swingstream.sources.ledger import batch_dir_name
 
 
 def _guard_and_record_intent(
@@ -98,7 +93,7 @@ def _guard_and_record_intent(
     (r5 advice: a crashed targeted pass retried as full-history that
     happens to hit the same replaces set would adopt the stale rows)."""
     intent_path = table._manifest_path(cid) + ".intent"
-    orphan_dir = os.path.join(table.data_dir, _commit_dir_label(cid))
+    orphan_dir = os.path.join(table.data_dir, batch_dir_name(cid))
     if os.path.isdir(orphan_dir):
         if not os.path.exists(intent_path):
             raise RuntimeError(
@@ -131,22 +126,24 @@ def _guard_and_record_intent(
                 f"{orphan_dir} to recompute with the current parameters"
             )
     else:
-        tmp = intent_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"replaces": replaces, "active": active_ids,
-                 "scope": scope, "targeted": targeted},
-                fh,
-                default=str,
-            )
-        os.replace(tmp, intent_path)
+        table.write_json(
+            intent_path,
+            {"replaces": replaces, "active": active_ids,
+             "scope": scope, "targeted": targeted},
+        )
 
 
 def _clear_intent(table: IcebergLiteTable, cid) -> None:
-    try:
-        os.remove(table._manifest_path(cid) + ".intent")
-    except OSError:
-        pass
+    table.remove(table._manifest_path(cid) + ".intent")
+
+
+def _replayed(table: IcebergLiteTable, cid) -> bool:
+    """True when ``cid`` is already committed (replay no-op).  Also drops
+    the intent sidecar a crash right after the commit point left behind."""
+    if not table.committed(cid):
+        return False
+    _clear_intent(table, cid)
+    return True
 
 
 def compact_dedup(
@@ -206,7 +203,7 @@ def compact_dedup(
     if not active:
         return None
     cid = compaction_id or f"compact-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
+    if _replayed(table, cid):
         return None
     if len(active) == 1 and active[0].get("operation") == "dedup-compaction":
         # already a single compacted rewrite: an "active"-scope pass has
@@ -232,7 +229,7 @@ def compact_dedup(
         # re-keyed; the loser set is localCheckpoint'ed because it
         # drives two actions (the affected-commit probe and the
         # rewrite) and is tiny (dup-cluster members only, ≪ corpus).
-        by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+        by_dir = {batch_dir_name(m["batch_id"]): m for m in active}
         labels = dedup_clusters(pairs)
         losers = (
             labels.where(F.col("id") != F.col("cluster_id"))
@@ -328,7 +325,7 @@ def compact_strip_lines(
     if not active:
         return None
     cid = compaction_id or f"striplines-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
+    if _replayed(table, cid):
         return None
 
     docs = table.read(spark)
@@ -337,7 +334,7 @@ def compact_strip_lines(
     ).localCheckpoint(eager=True)  # drives the affected-doc probe AND the
     # rewrite; small (only > max_docs_per_line digests survive)
 
-    by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+    by_dir = {batch_dir_name(m["batch_id"]): m for m in active}
     tagged = docs.select(
         "*",
         F.element_at(
@@ -419,7 +416,7 @@ def compact_window_dedup(
     if not active:
         return None
     cid = compaction_id or f"windowdedup-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
+    if _replayed(table, cid):
         return None
 
     docs = table.read(spark)
@@ -428,7 +425,7 @@ def compact_window_dedup(
     ).localCheckpoint(eager=True)  # drives the affected probe AND the
     # rewrite; small (only repeated-span positions survive)
 
-    by_dir = {_commit_dir_label(m["batch_id"]): m for m in active}
+    by_dir = {batch_dir_name(m["batch_id"]): m for m in active}
     tagged = docs.select(
         "*",
         F.element_at(
@@ -507,7 +504,7 @@ def compact_small_files(
     """
     active = table.active_manifests()
     cid = compaction_id or f"binpack-adhoc-{len(table.manifests())}"
-    if table.committed(cid):
+    if _replayed(table, cid):
         return None
     small = [m for m in active if m["metrics"]["rows"] < min_rows]
     if len(small) < 2:

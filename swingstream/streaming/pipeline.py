@@ -210,7 +210,5 @@ def run_feature_query(
         }
         sp = _os.path.join(table.manifest_dir, f"observed-{j['batchId']}.json")
         if not _os.path.exists(sp):
-            with open(sp + ".tmp", "w") as fh:
-                _json.dump(side, fh, indent=1)
-            _os.replace(sp + ".tmp", sp)
+            table.write_json(sp, side, indent=1)
     return table, dropped

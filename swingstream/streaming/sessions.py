@@ -307,9 +307,7 @@ def run_session_pipeline(
         }
         sp = os.path.join(feat_table.manifest_dir, f"observed-{j['batchId']}.json")
         if not os.path.exists(sp):
-            with open(sp + ".tmp", "w") as fh:
-                _json.dump(side, fh, indent=1)
-            os.replace(sp + ".tmp", sp)
+            feat_table.write_json(sp, side, indent=1)
     q2.processAllAvailable()  # drain everything query 1 committed
     q2.stop()
     q2.awaitTermination()

@@ -33,22 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-# transformWithStateInPandas' state IPC is protobuf-based; this sandbox
-# ships no google.protobuf (and no network to install it), so the modern
-# T5 form is implemented + tested-by-parity where available, with the
-# applyInPandasWithState twin as the in-sandbox default.  Same
-# environment-constraint class as the absent Iceberg jar (SURVEY.md §0).
-try:  # pragma: no cover - environment probe
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    TWS_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    TWS_AVAILABLE = False
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -209,63 +193,18 @@ def make_state_fn(params: SwingParams, names: list[str]):
     return fn
 
 
-class SwingScoringProcessor(StatefulProcessor):
-    """T5 modern form: the same sparse-buffer scoring state machine as
-    make_state_fn, hosted in Spark 4's ``transformWithStateInPandas``
-    (SURVEY.md §2.8 T5 preferred API).  State lives in a ValueState of
-    STATE_SCHEMA; the legacy ``applyInPandasWithState`` path is kept as
-    a byte-parity twin (test_tws_matches_legacy_and_batch)."""
-
-    def __init__(self, params: SwingParams, names: list[str]):
-        self._params = params
-        self._names = names
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._buf = handle.getValueState("buf", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        prev = tuple(self._buf.get()) if self._buf.exists() else None
-        scored, new_state = _advance(
-            str(key[0]), prev, rows, self._params, self._names
-        )
-        self._buf.update(new_state)
-        if scored:
-            yield _emit_frame(scored)
-
-    def close(self) -> None:
-        pass
-
-
 def score_stream(
     features: DataFrame,
     params: SwingParams,
     names: list[str],
-    api: str | None = None,
 ) -> DataFrame:
-    """feature stream -> streaming edge rows (append mode).
-
-    api=None resolves to 'tws' (transformWithStateInPandas, the Spark-4
-    preferred form) when the protobuf runtime exists, else to the
-    'legacy' applyInPandasWithState twin — byte-identical output either
-    way (test_tws_matches_legacy_and_batch).
-    """
-    if api is None:
-        api = "tws" if TWS_AVAILABLE else "legacy"
-    if api == "legacy":
-        return features.groupBy("group_key").applyInPandasWithState(
-            make_state_fn(params, names),
-            EDGE_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    return features.groupBy("group_key").transformWithStateInPandas(
-        statefulProcessor=SwingScoringProcessor(params, names),
-        outputStructType=EDGE_SCHEMA,
-        outputMode="append",
-        timeMode="none",
+    """feature stream -> streaming edge rows (append mode)."""
+    return features.groupBy("group_key").applyInPandasWithState(
+        make_state_fn(params, names),
+        EDGE_SCHEMA,
+        STATE_SCHEMA,
+        "append",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -279,13 +218,11 @@ def start_scoring_query(
     *,
     available_now: bool = True,
     max_files_per_trigger: int = 4,
-    api: str | None = None,
 ):
     """Start query 2 over the staged feature files; returns (query, table).
 
     available_now=False starts a continuous micro-batch trigger — the
     production topology where query 2 tails query 1's commits live.
-    api: None (auto) | 'tws' | 'legacy' — see score_stream.
     """
     from swingstream.sources.catalog import IcebergLiteTable
     from swingstream.streaming.pipeline import FEATURE_SCHEMA
@@ -297,7 +234,7 @@ def start_scoring_query(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(staging_data_dir)
     )
-    edges = score_stream(feats, params, names, api=api)
+    edges = score_stream(feats, params, names)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         table.commit(batch_id, batch_df, "win_start_ts")
@@ -324,11 +261,10 @@ def run_scoring_query(
     checkpoint: str,
     params: SwingParams,
     names: list[str],
-    api: str | None = None,
 ):
     """Run query 2 to completion over the staged feature files."""
     q, table = start_scoring_query(
-        spark, staging_data_dir, out_root, checkpoint, params, names, api=api
+        spark, staging_data_dir, out_root, checkpoint, params, names
     )
     q.awaitTermination()
     return table

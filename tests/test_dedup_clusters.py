@@ -231,3 +231,21 @@ def test_dedup_survivors_keep_by_quality(spark):
         .collect()[0]
     )
     assert row.quality == 0.9
+
+
+def test_candidate_guard_refuses_uneven_band_rows(spark):
+    """n is derived as Σ|bucket| / rows_per_input; a banded frame whose
+    total is not a multiple of rows_per_input (a row lost or added by
+    the banding) must fail loudly, not floor to a wrong n."""
+    import swingstream.operators.dedup as dd
+
+    bands = 4
+    rows = [(i, b, (i * 7 + b) % 5) for i in range(10) for b in range(bands)]
+    banded = spark.createDataFrame(rows, "id long, band_idx int, band_hash long")
+    # the intact frame passes: 40 rows = 10 inputs × 4 bands
+    dd.candidate_bound_check(banded, ["band_idx", "band_hash"], None, "t",
+                             rows_per_input=bands)
+    short = banded.where("NOT (id = 3 AND band_idx = 2)")
+    with pytest.raises(RuntimeError, match="not a multiple of rows_per_input"):
+        dd.candidate_bound_check(short, ["band_idx", "band_hash"], None, "t",
+                                 rows_per_input=bands)

@@ -979,51 +979,6 @@ def test_dark_host_bounded_state_and_parity(spark, tmp_path):
     assert dark["win_start"].nunique() < 60
 
 
-def test_tws_matches_legacy_and_batch(spark, stream_dir, tmp_path):
-    """T5 modern form: transformWithStateInPandas scoring ==
-    applyInPandasWithState scoring == batch, byte-identical edges.
-
-    Skipped where the protobuf runtime is absent (this sandbox ships no
-    google.protobuf and has no network): TWS' state IPC is protobuf-
-    based, so the query cannot start — the implementation is complete
-    and this test is its gate wherever protobuf exists."""
-    from swingstream.streaming.state import TWS_AVAILABLE
-
-    if not TWS_AVAILABLE:
-        pytest.skip("google.protobuf not installed — transformWithState "
-                    "driver worker cannot start in this sandbox")
-    from swingstream.operators.features import densify_buckets
-    from swingstream.pipeline import series_from_features, swing_edges
-    from swingstream.streaming.pipeline import FEATURE_SCHEMA, run_feature_query
-    from swingstream.streaming.state import run_scoring_query
-
-    path, _ = stream_dir
-    feat_table, _ = run_feature_query(
-        spark, path, str(tmp_path / "featT"), str(tmp_path / "ckT"), PARAMS,
-        max_files_per_trigger=2,
-    )
-    tws = run_scoring_query(
-        spark, feat_table.data_dir, str(tmp_path / "edges_tws"),
-        str(tmp_path / "ck_tws"), PARAMS, list(PARAMS.feature_names), api="tws",
-    ).read(spark).toPandas()
-    legacy = run_scoring_query(
-        spark, feat_table.data_dir, str(tmp_path / "edges_leg"),
-        str(tmp_path / "ck_leg"), PARAMS, list(PARAMS.feature_names), api="legacy",
-    ).read(spark).toPandas()
-    feats = feat_table.read(spark, FEATURE_SCHEMA)
-    batch = swing_edges(
-        series_from_features(densify_buckets(feats, PARAMS)), PARAMS
-    ).toPandas()
-    key = ["group_key", "win_start", "parent", "child", "lag"]
-    cols = key + ["importance", "win_start_ts"]
-    a = tws.sort_values(key).reset_index(drop=True)
-    b = legacy.sort_values(key).reset_index(drop=True)
-    c = batch.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b) == len(c) and len(a) > 0
-    pd.testing.assert_frame_equal(a[cols], b[cols])
-    pd.testing.assert_frame_equal(a[cols], c[cols])
-
-
 def test_session_pipeline_matches_batch(spark, tmp_path):
     """Session-window SWING variant: streaming (session_window agg +
     sequence-indexed stateful scoring) == batch twin
